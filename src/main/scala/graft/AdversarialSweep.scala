@@ -47,6 +47,9 @@ object AdversarialSweep {
       drive("socialMetaOf")(graft.ops.PageMeta.socialMetaOf(0L, root, sels))
       drive("captionsOf")(graft.ops.PageMeta.captionsOf(0L, root, sels))
       drive("mediaSourcesOf")(graft.ops.PageMeta.mediaSourcesOf(0L, root))
+      // JSON-LD reads script bodies, which only a script = true parse keeps
+      drive("jsonLdOf")(graft.ops.PageMeta.jsonLdOf(0L, graft.kernel.HtmlParser
+        .parse(html, graft.kernel.ParseOptions(script = true)), sels))
       drive("parseSrcset")(graft.ops.PageMeta.parseSrcset(html.take(4096)))
     }
     val wall = (System.nanoTime() - t0) / 1e9

@@ -1,10 +1,9 @@
 package graft.kernel
 
-/** Tiny CLI surface over the kernel for manual verification and single-node
-  * throughput checks:
+/** Tiny CLI surface over the kernel for manual verification (throughput
+  * lives in perfbench's kernel layer):
   *
   *   runMain graft.kernel.KernelCli parse <file> [selector]
-  *   runMain graft.kernel.KernelCli bench <file> <iterations>
   *   runMain graft.kernel.KernelCli text  <file>
   *   runMain graft.kernel.KernelCli main  <file>   # boilerplate-stripped
   */
@@ -31,21 +30,6 @@ object KernelCli {
         val r = Boilerplate.mainContent(html)
         println(s"--- stripped ${r.n_stripped} boilerplate subtrees ---")
         println(r.main_text)
-      case "bench" =>
-        val iters = args(2).toInt
-        var i = 0
-        // warmup
-        while (i < math.min(iters, 50)) { HtmlParser.parse(html); i += 1 }
-        val t0 = System.nanoTime()
-        i = 0
-        var nodes = 0L
-        while (i < iters) {
-          val r = HtmlParser.parse(html)
-          nodes += r.childNodes.length
-          i += 1
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"parsed $iters%d docs of ${html.length}%d chars in $sec%.3f s = ${iters / sec}%.1f docs/sec/core")
       case other => sys.error(s"unknown op $other")
     }
   }

@@ -102,8 +102,7 @@ object Dedup {
     // UDF over the corpus per consumer (guide §8: decide on lightweight
     // proxies computed in one pass; measured 2 full UDF passes → 1)
     val b = minhashBands(docs, numHashes, bands).localCheckpoint(false)
-    val keep = b.groupBy("band", "bucket").agg(count(lit(1)).as("__bn"))
-      .filter(col("__bn") <= maxBucket).select("band", "bucket")
+    val keep = capBuckets(b, maxBucket, hot = false).select("band", "bucket")
     val kept = b.join(keep, Seq("band", "bucket"))
       .select("doc_id", "band", "bucket")
     val l = kept.toDF("id1", "band", "bucket")
@@ -113,12 +112,17 @@ object Dedup {
       .select("id1", "id2").distinct()
   }
 
+  /** The one hot-bucket cap rule: a bands table's (band, bucket, `__bn`
+    * population) rows over `maxBucket` (`hot`) or within it. */
+  private def capBuckets(b: DataFrame, maxBucket: Int, hot: Boolean): DataFrame = {
+    val sizes = b.groupBy("band", "bucket").agg(count(lit(1)).as("__bn"))
+    sizes.filter(if (hot) col("__bn") > maxBucket else col("__bn") <= maxBucket)
+  }
+
   /** One pass over the skinny id column proving `doc_id` is unique —
     * duplicate ids silently corrupt components (join fan-out multiplies
-    * edges; min-label picks between conflicting rows), so the iterative
-    * loops verify by default. One extra distinct-agg action; disable via
-    * `validateIds = false` when the caller has already proven uniqueness
-    * (e.g. the ids ARE a groupBy key).
+    * edges; min-label picks between conflicting rows), so clustering
+    * always verifies. One extra distinct-agg action.
     */
   private def requireDistinctIds(ids: DataFrame): Unit = {
     val row = ids.agg(count(lit(1)), countDistinct(col("doc_id"))).head
@@ -127,32 +131,36 @@ object Dedup {
         s"${row.getLong(1)} distinct doc_ids")
   }
 
-  /** Connected components over near-dup candidate pairs — the step that
-    * actually deduplicates a corpus (each cluster keeps one canonical doc).
-    * Pregel-style min-label propagation: every node's label converges to the
-    * smallest doc_id reachable through candidate edges; rounds = component
-    * diameter (near-dup clusters are dense, so typically 2–4). Each round is
-    * one equi-join + one partial-aggregated groupBy — shuffle-on-key, no
-    * driver-side graph. `ids` must contain every doc (singletons cluster as
-    * themselves); pair endpoints missing from `ids` still propagate labels
-    * but emit no output row of their own.
+  private val MaxRounds = 50 // label-propagation rounds before giving up
+
+  /** Connected components over a bipartite doc↔bucket membership table —
+    * the step that deduplicates a corpus (each cluster keeps one canonical
+    * doc). Min-label propagation: each doc's label converges to the
+    * smallest doc_id reachable through shared buckets. A bucket of k docs
+    * contributes k membership edges instead of k(k-1)/2 pairs, so the edge
+    * table stays LINEAR in the corpus however dense the near-dups are. One
+    * round = doc→bucket min + bucket→doc min (one pair-graph hop: a doc
+    * takes the least of its own and its neighbours' labels) + pointer jump.
+    * Candidate pairs (id1, id2) cluster the same way, as two-member buckets:
+    * {{{
+    * val key = struct(col("id1"), col("id2")).as("bucket_key")
+    * val memberships = pairs.select(col("id1").as("doc_id"), key)
+    *   .union(pairs.select(col("id2").as("doc_id"), key))
+    * }}}
+    * `ids` must hold every doc once (checked); singletons cluster as
+    * themselves, and memberships of docs missing from `ids` are dropped.
     *
-    * Each round's labels are `localCheckpoint`ed, not merely cached: the
-    * checkpoint truncates the LOGICAL plan to a scan of the materialized
-    * round, so analyzer/optimizer cost and plan depth stay CONSTANT per
-    * round instead of nesting every prior round (pre-fix the final plan
-    * carried 4,088 Exchange nodes; post-fix ≤ a handful), and a lost block
-    * at round k recomputes round k only, not the whole k-round join chain.
-    * Blocks from rounds ≥2 back are unreferenced and reclaimed by the
-    * ContextCleaner. On a real cluster with node churn, swap
-    * localCheckpoint for reliable `checkpoint()` into the table dir — same
-    * plan shape, executor-loss-proof.
+    * Each round's labels are `localCheckpoint`ed, not merely cached: plan
+    * depth and optimizer cost stay CONSTANT per round instead of nesting
+    * every prior round (pre-fix the final plan carried 4,088 Exchange
+    * nodes), and a lost block at round k recomputes round k only, not the
+    * whole join chain. Blocks from rounds ≥2 back are unreferenced and
+    * reclaimed by the ContextCleaner. On a cluster with node churn, swap in
+    * reliable `checkpoint()` — same plan shape, executor-loss-proof.
     */
-  def clustersFromPairs(ids: DataFrame, pairs: DataFrame,
-      maxIter: Int = 50, validateIds: Boolean = true): DataFrame = {
-    if (validateIds) requireDistinctIds(ids)
-    val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
-      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
+  def clustersFromMemberships(ids: DataFrame, memberships: DataFrame): DataFrame = {
+    requireDistinctIds(ids)
+    val member = memberships.select(col("doc_id").as("mid"), col("bucket_key"))
       .cache()
     // lazy localCheckpoint: the labelSum action below materializes it
     var labels = ids.select(col("doc_id").as("id"))
@@ -161,63 +169,11 @@ object Dedup {
     // strictly decreases iff ANY label changed — convergence costs ONE agg
     // action per round instead of a per-row comparison join
     def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).head
-        .getDecimal(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // hop: take the minimum label among direct neighbors
-      val nbrMin = edges.join(labels, col("src") === col("id"))
-        .groupBy(col("dst")).agg(min("label").as("nmin"))
-      val hopped = labels.join(nbrMin, col("id") === col("dst"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      // pointer jump: label(id) <- label(label(id)). A label is always a
-      // doc id in the same component whose own label can only be smaller,
-      // so the jump is valid and halves remaining path lengths — rounds
-      // become O(log diameter) instead of O(diameter) on chain-shaped
-      // candidate graphs (measured 50+ -> ~7 rounds on sf0.1)
-      val byId = hopped.select(col("id").as("jid"), col("label").as("jlabel"))
-      val next = hopped.join(byId, hopped("label") === byId("jid"), "left")
-        .select(hopped("id"),
-          coalesce(col("jlabel"), hopped("label")).as("label"))
-        .localCheckpoint(false)
-      val s = labelSum(next) // materializes the checkpoint
-      labels = next
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      iter += 1
-    }
-    edges.unpersist()
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
-
-  /** Connected components over a bipartite doc↔bucket membership table —
-    * the scale-correct formulation for LSH clustering: a bucket of k docs
-    * contributes k membership edges instead of k(k-1)/2 candidate pairs, so
-    * the edge table stays LINEAR in the corpus no matter how dense the
-    * near-dup structure is. Components are identical to the pairwise
-    * formulation (a bucket's docs form a clique either way). One round =
-    * doc→bucket min + bucket→doc min (exactly one pair-graph hop) + pointer
-    * jump.
-    *
-    * Lineage is truncated per round with `localCheckpoint` — see
-    * [[clustersFromPairs]] for why (constant plan depth, bounded recompute).
-    */
-  def clustersFromMemberships(ids: DataFrame, memberships: DataFrame,
-      maxIter: Int = 50, validateIds: Boolean = true): DataFrame = {
-    if (validateIds) requireDistinctIds(ids)
-    val member = memberships.select(col("doc_id").as("mid"), col("bucket_key"))
-      .cache()
-    var labels = ids.select(col("doc_id").as("id"))
-      .withColumn("label", col("id")).localCheckpoint(false)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0)
     var prevSum = labelSum(labels)
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxRounds) {
       val bucketMin = member.join(labels, col("mid") === col("id"))
         .groupBy(col("bucket_key")).agg(min("label").as("bmin"))
       val docMin = member.join(bucketMin, "bucket_key")
@@ -225,6 +181,11 @@ object Dedup {
       val hopped = labels.join(docMin, col("id") === col("mid"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+      // pointer jump: label(id) <- label(label(id)). A label is always a
+      // doc id in the same component whose own label can only be smaller,
+      // so the jump is valid and halves remaining path lengths — rounds
+      // become O(log diameter) instead of O(diameter) on chain-shaped
+      // candidate graphs (measured 50+ -> ~7 rounds on sf0.1)
       val byId = hopped.select(col("id").as("jid"), col("label").as("jlabel"))
       val next = hopped.join(byId, hopped("label") === byId("jid"), "left")
         .select(hopped("id"),
@@ -252,8 +213,7 @@ object Dedup {
     // checkpoint UNDER that cache double-materializes nearly identical
     // rows and costs more than the one UDF pass it saves
     val b = minhashBands(docs, numHashes, bands)
-    val keep = b.groupBy("band", "bucket").agg(count(lit(1)).as("__bn"))
-      .filter(col("__bn") <= maxBucket).select("band", "bucket")
+    val keep = capBuckets(b, maxBucket, hot = false).select("band", "bucket")
     val kept = b.join(keep, Seq("band", "bucket"))
       .select(col("doc_id"), struct(col("band"), col("bucket")).as("bucket_key"))
     clustersFromMemberships(docs.select("doc_id"), kept)
@@ -298,9 +258,8 @@ object Dedup {
     */
   def hotBuckets(docs: DataFrame, numHashes: Int = 32, bands: Int = 8,
       maxBucket: Int = 10000): DataFrame =
-    minhashBands(docs, numHashes, bands)
-      .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxBucket)
+    capBuckets(minhashBands(docs, numHashes, bands), maxBucket, hot = true)
+      .withColumnRenamed("__bn", "n")
 
   /** 64-bit SimHash over whitespace tokens (unit weights). */
   def simhash(docs: DataFrame): DataFrame = {

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import graft.kernel.{HtmlParser, Query}
+import graft.kernel.{Element, HtmlParser, ParseOptions, Query}
 
 /** Page-level metadata extraction — the two tables every crawl pipeline
   * builds next to the text corpus:
@@ -12,12 +13,12 @@ import graft.kernel.{HtmlParser, Query}
   *     generation all read this table, not the HTML)
   *   - [[outlinks]]: the link-graph edge list (href, anchor text, nofollow)
   *     — the input to in/out-degree metrics, host-level graphs, and
-  *     connected components (Dedup.clustersFromPairs is generic over any
-  *     edge table, including this one)
+  *     connected components (Dedup.clustersFromMemberships takes any edge
+  *     table, this one included, as two-member buckets)
   *
-  * Both are one kernel parse per page inside the same mapPartitions shape
-  * as ExtractJob (map-only, no shuffle); selectors compile once per
-  * partition, the reference-compile-once-per-query pattern
+  * Every extractor is one kernel parse per page through [[perPage]], the
+  * same mapPartitions shape as ExtractJob (map-only, no shuffle); selectors
+  * compile once per partition, the reference-compile-once-per-query pattern
   * (/root/reference/src/index.ts:408). Degree metrics are plain relational
   * aggregations over the edge table.
   */
@@ -36,9 +37,6 @@ object PageMeta {
       anchor: String,
       nofollow: Boolean)
 
-  private def parseBytes(html: Array[Byte]) =
-    HtmlParser.parse(new String(html, java.nio.charset.StandardCharsets.UTF_8))
-
   /** Compiled-selector bundle for the per-page extractors — build ONE per
     * partition (or per test thread): selector compilation is the
     * compile-once-per-query pattern, not per-row work.
@@ -56,7 +54,26 @@ object PageMeta {
     private[ops] val img = Query.compileUnion("img")
     private[ops] val figure = Query.compileUnion("figure")
     private[ops] val figcaption = Query.compileUnion("figcaption")
+    private[ops] val jsonLd = Query.compileUnion("script[type=\"application/ld+json\"]")
   }
+
+  /** The one per-page operator every extractor here runs on: projects
+    * (doc_id, html) out of a pages frame, decodes the bytes as UTF-8,
+    * builds one [[PageSelectors]] per partition, parses each page once with
+    * `opts` and emits whatever the pure `f` returns for it, in page order.
+    */
+  private def perPage[T <: Product : TypeTag](pages: DataFrame,
+      opts: ParseOptions = ParseOptions())(
+      f: (Long, Element, PageSelectors) => IterableOnce[T]): Dataset[T] =
+    pages.select(col("doc_id").cast("long"), col("html"))
+      .as(Encoders.product[(Long, Array[Byte])])
+      .mapPartitions { it =>
+        val sels = new PageSelectors
+        it.flatMap { case (id, html) =>
+          f(id, HtmlParser.parse(
+            new String(html, java.nio.charset.StandardCharsets.UTF_8), opts), sels)
+        }
+      }(Encoders.product[T])
 
   /** Document BASE declaration (`<base href=...>`): the first `base`
     * element carrying an `href` attribute wins, in tree order, exactly as
@@ -96,16 +113,8 @@ object PageMeta {
   }
 
   /** (doc_id, html) or a full pages frame → one HeadMeta row per page. */
-  def headMeta(pages: DataFrame): Dataset[HeadMeta] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.map { case (id, html) => headMetaOf(id, parseBytes(html), sels) }
-      }
-  }
+  def headMeta(pages: DataFrame): Dataset[HeadMeta] =
+    perPage(pages)((id, root, s) => Some(headMetaOf(id, root, s)))
 
   /** (doc_id, html) → link-graph edges in document order. `href`-less
     * anchors are skipped (they are fragment targets, not edges); `nofollow`
@@ -125,18 +134,8 @@ object PageMeta {
       }
     }.toSeq
 
-  def outlinks(pages: DataFrame): Dataset[Outlink] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          outlinksOf(id, parseBytes(html), sels)
-        }
-      }
-  }
+  def outlinks(pages: DataFrame): Dataset[Outlink] =
+    perPage(pages)(outlinksOf)
 
   /** [[outlinks]] plus the page's `<base href>` declaration riding every
     * edge row as `page_base` ("" when the page declares none) — ONE kernel
@@ -145,54 +144,35 @@ object PageMeta {
     * href against `UrlOps.documentBase(page_url, page_base)`, not the page
     * url alone (q78/q81 compose it that way).
     */
-  def outlinksWithBase(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          val root = parseBytes(html)
-          val base = pageBaseOf(root, sels)
-          outlinksOf(id, root, sels).map(o =>
-            (o.doc_id, o.href, o.anchor, o.nofollow, base))
-        }
-      }
-      .toDF("doc_id", "href", "anchor", "nofollow", "page_base")
-  }
+  def outlinksWithBase(pages: DataFrame): DataFrame =
+    perPage(pages) { (id, root, s) =>
+      val base = pageBaseOf(root, s)
+      outlinksOf(id, root, s).map(o =>
+        (o.doc_id, o.href, o.anchor, o.nofollow, base))
+    }.toDF("doc_id", "href", "anchor", "nofollow", "page_base")
 
   /** Structured-data (JSON-LD) extraction: the schema.org payloads sites
     * embed in `<script type="application/ld+json">` blocks — the highest-
     * precision metadata a crawl carries (article headlines, authors,
-    * dates), extracted by every serious web pipeline. One kernel parse per
-    * page, selector compiled once per partition; the script body comes via
+    * dates), extracted by every serious web pipeline. Pass a tree parsed
+    * with `ParseOptions(script = true)`: the reference's default drops
+    * script BODIES (reference src/index.ts:16, 936–959), and JSON-LD lives
+    * in them. The script body comes via
     * `rawText` (the raw-text fast path — reference src/index.ts:879–884 —
     * keeps it verbatim, with NO entity decode: decoding would corrupt JSON
     * containing `&`). Blocks emit in document order with their index, one
     * row per block; downstream JSON field access is left to Spark's
     * codegen'd `get_json_object`/`from_json`, not the kernel.
     */
-  def jsonLd(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sel = Query.compileUnion("script[type=\"application/ld+json\"]")
-        // script=true: the reference's default drops script BODIES
-        // (reference src/index.ts:16, 936–959); JSON-LD lives in them
-        val opts = graft.kernel.ParseOptions(script = true)
-        it.flatMap { case (id, html) =>
-          val root = HtmlParser.parse(
-            new String(html, java.nio.charset.StandardCharsets.UTF_8), opts)
-          Query.querySelectorAll(root, sel).iterator.zipWithIndex.map {
-            case (s, i) => (id, i, s.rawText)
-          }
-        }
-      }
+  def jsonLdOf(id: Long, root: Element,
+      s: PageSelectors): Seq[(Long, Int, String)] =
+    Query.querySelectorAll(root, s.jsonLd).iterator.zipWithIndex.map {
+      case (b, i) => (id, i, b.rawText)
+    }.toSeq
+
+  def jsonLd(pages: DataFrame): DataFrame =
+    perPage(pages, ParseOptions(script = true))(jsonLdOf)
       .toDF("doc_id", "block_idx", "json")
-  }
 
   /** HTML TABLE extraction — tables are the web's structured-data modality
     * (stats, specs, leaderboards); curation pipelines lift them out of the
@@ -227,19 +207,9 @@ object PageMeta {
         }
     }.toSeq
 
-  def tables(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          tableRowsOf(id, parseBytes(html), sels)
-        }
-      }
+  def tables(pages: DataFrame): DataFrame =
+    perPage(pages)(tableRowsOf)
       .toDF("doc_id", "table_idx", "row_idx", "is_header", "cells")
-  }
 
   /** WHATWG srcset microsyntax parser → (url, descriptor) candidates in
     * declaration order. The splitting rule is NOT split-on-comma — URLs
@@ -317,17 +287,8 @@ object PageMeta {
         (id, i, src, alt, srcset)
     }.toSeq
 
-  def images(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) => imagesOf(id, parseBytes(html), sels) }
-      }
-      .toDF("doc_id", "img_idx", "src", "alt", "srcset")
-  }
+  def images(pages: DataFrame): DataFrame =
+    perPage(pages)(imagesOf).toDF("doc_id", "img_idx", "src", "alt", "srcset")
 
   /** SOCIAL-CARD metadata (OpenGraph + Twitter cards) — the
     * publisher-declared summary every caption/article pipeline mines
@@ -367,18 +328,10 @@ object PageMeta {
       Option(ogType).getOrElse(""), Option(twCard).getOrElse("")))
   }
 
-  def socialMeta(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) => socialMetaOf(id, parseBytes(html), sels) }
-      }
+  def socialMeta(pages: DataFrame): DataFrame =
+    perPage(pages)(socialMetaOf)
       .toDF("doc_id", "og_title", "og_description", "og_image", "og_url",
         "og_type", "twitter_card")
-  }
 
   /** IMAGE-CAPTION pairs from semantic figure markup — the richest
     * publisher-authored caption signal a page carries (`alt` text is
@@ -446,17 +399,9 @@ object PageMeta {
   }
   private object FrameEnd
 
-  def captions(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) => captionsOf(id, parseBytes(html), sels) }
-      }
+  def captions(pages: DataFrame): DataFrame =
+    perPage(pages)(captionsOf)
       .toDF("doc_id", "fig_idx", "img_src", "img_alt", "caption")
-  }
 
   /** MEDIA-SOURCE extraction (`video` / `audio` / `picture`) — the URL
     * table a multimodal corpus fetch starts from: one row per media
@@ -512,17 +457,10 @@ object PageMeta {
     out.toSeq
   }
 
-  def mediaSources(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, html) => mediaSourcesOf(id, parseBytes(html)) }
-      }
+  def mediaSources(pages: DataFrame): DataFrame =
+    perPage(pages)((id, root, _) => mediaSourcesOf(id, root))
       .toDF("doc_id", "media_idx", "item_idx", "tag", "kind", "url",
         "media", "mime")
-  }
 
   /** hreflang ALTERNATES — the multilingual-corpus construction signal:
     * `<link rel="alternate" hreflang=".." href="..">` clusters the same
@@ -544,19 +482,8 @@ object PageMeta {
       .map { case ((lang, href), i) => (id, i, lang, href) }
       .toSeq
 
-  def alternates(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          alternatesOf(id, parseBytes(html), sels)
-        }
-      }
-      .toDF("doc_id", "alt_idx", "hreflang", "href")
-  }
+  def alternates(pages: DataFrame): DataFrame =
+    perPage(pages)(alternatesOf).toDF("doc_id", "alt_idx", "hreflang", "href")
 
   /** META-REFRESH redirects — the html-level redirect mechanism crawlers
     * must honor next to HTTP 3xx (soft-404 pages, moved content, interstitials
@@ -588,19 +515,8 @@ object PageMeta {
       }
       .take(1).toSeq.headOption // first valid declaration wins, like browsers
 
-  def metaRefresh(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          metaRefreshOf(id, parseBytes(html), sels)
-        }
-      }
-      .toDF("doc_id", "delay_sec", "target")
-  }
+  def metaRefresh(pages: DataFrame): DataFrame =
+    perPage(pages)(metaRefreshOf).toDF("doc_id", "delay_sec", "target")
 
   /** RECIPROCAL hreflang verification — the bidirectional-confirmation
     * join parallel-corpus miners run before trusting a language pair: page
@@ -681,13 +597,7 @@ object PageMeta {
     * scale.
     */
   def templates(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val fps = pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, html) => (id, templateFpOf(parseBytes(html))) }
-      }
+    val fps = perPage(pages)((id, root, _) => Some((id, templateFpOf(root))))
       .toDF("doc_id", "template_fp")
       // one kernel pass: the 16-byte (doc_id, fp) rows are materialized
       // (lazy localCheckpoint) so the group aggregation and the join-back
@@ -759,16 +669,9 @@ object PageMeta {
     out.toSeq
   }
 
-  def outline(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, html) => outlineOf(id, parseBytes(html)) }
-      }
+  def outline(pages: DataFrame): DataFrame =
+    perPage(pages)((id, root, _) => outlineOf(id, root))
       .toDF("doc_id", "pos", "level", "heading")
-  }
 
   /** HOST-level link graph rollup — the domain-granularity view every
     * crawl ranks and curates with (page-level graphs are too big to eyeball

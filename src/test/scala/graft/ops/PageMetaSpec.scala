@@ -104,9 +104,67 @@ class PageMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.getAs[String]("resolved") == "https://h.example/dir/sub/up/p.html")
   }
 
+  // Hand-written pages in the shape of real ones: head metadata, nav, and
+  // links of every flavour (relative, parent-relative, absolute,
+  // protocol-relative, fragment, query-only, mailto, nofollow) plus
+  // href-less anchors, which are not edges.
+  private val webmailPage =
+    """<!DOCTYPE html><html><head><meta charset="utf-8">
+      |<base href="https://mail.example/app/u/0/"><title>Inbox (3)</title>
+      |<link rel="stylesheet" href="static/app.css"></head>
+      |<body><div id="nav"><a href="#inbox">Inbox</a> <a href="?view=sent">Sent</a>
+      |<a href="compose">Compose</a> <a name="anchor-only">-</a></div>
+      |<table><tr><td><a href="msg/17">Lunch on Friday?</a></td></tr>
+      |<tr><td><a href="../1/msg/4">Shared inbox</a></td></tr></table>
+      |<a href="https://accounts.example/logout" rel="noopener nofollow">Sign out</a>
+      |</body></html>""".stripMargin
+
+  private val rentalsPage =
+    """<!DOCTYPE html><html><head><meta charset="utf-8">
+      |<title>Tents &amp; tables</title><link rel="stylesheet" href="/css/site.css">
+      |</head><body><nav><a href="/">Home</a> | <a href="rentals/tents.html">Tents</a>
+      || <a href="../contact">Contact</a></nav>
+      |<p>Call or <a href="mailto:info@rentals.example">write</a>. <a name="top">top</a></p>
+      |<ul><li><a href="https://partner.example/deal" rel="nofollow sponsored">Deal</a></li>
+      |<li><a href="#faq">FAQ</a></li><li><a href="?page=2">More</a></li></ul>
+      |<footer><a href="//cdn.example/terms.pdf">Terms</a></footer></body></html>""".stripMargin
+
+  private def edgesOf(html: String) =
+    PageMeta.outlinksWithBase(pagesOf(html)).collect().toSeq.map(r =>
+      (r.getAs[String]("href"), r.getAs[String]("anchor"),
+        r.getAs[Boolean]("nofollow"), r.getAs[String]("page_base")))
+
+  test("outlinksWithBase: a hand-written page's declared <base href> rides every edge") {
+    val rows = edgesOf(webmailPage)
+    assert(rows.map(_._1) == Seq("#inbox", "?view=sent", "compose", "msg/17",
+      "../1/msg/4", "https://accounts.example/logout"))
+    assert(rows.forall(_._4 == "https://mail.example/app/u/0/"))
+    assert(rows.map(_._3) == Seq(false, false, false, false, false, true))
+  }
+
+  test("outlinksWithBase: a hand-written page with no base yields \"\" on every edge") {
+    val rows = edgesOf(rentalsPage)
+    assert(rows.length == 8)
+    assert(rows.forall(_._4 == ""))
+  }
+
+  test("outlinksWithBase: a base injected into a hand-written page is honoured; edge set unchanged") {
+    val injected = rentalsPage.replaceFirst("<head>",
+      "<head><base href=\"https://base.example/g/\">")
+    assert(injected != rentalsPage)
+    val plain = edgesOf(rentalsPage)
+    val rows = edgesOf(injected)
+    assert(rows.map(r => (r._1, r._2, r._3)) == plain.map(r => (r._1, r._2, r._3)))
+    assert(rows.forall(_._4 == "https://base.example/g/"))
+  }
+
   test("real-page golden: gmail.html's real <base href> rides every edge; injected base honored") {
-    def read(p: String) = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(p)), "UTF-8")
+    // the reference corpus is optional: cancel, like CorpusSpec, when absent
+    def read(p: String) = {
+      val path = java.nio.file.Paths.get(p)
+      if (!java.nio.file.Files.exists(path)) cancel(s"corpus file $p not available")
+      new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+    }
     // gmail.html declares a REAL base — the exact production shape this
     // feature exists for (reference test/html/gmail.html)
     val gmail = PageMeta.outlinksWithBase(pagesOf(
@@ -250,6 +308,7 @@ class PageMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deep = "<div>" * 50000 +
       "<a href=\"/x\">t</a><table><tr><td>c</td></tr></table>" +
       "<link rel=\"alternate\" hreflang=\"fr\" href=\"/fr\">" +
+      "<script type=\"application/ld+json\">{\"@type\":\"Thing\"}</script>" +
       "</div>" * 50000
     val t0 = System.nanoTime()
     val root = graft.kernel.HtmlParser.parse(deep)
@@ -266,6 +325,11 @@ class PageMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     PageMeta.socialMetaOf(0L, root, sels)
     PageMeta.captionsOf(0L, root, sels)
     PageMeta.mediaSourcesOf(0L, root)
+    // JSON-LD needs script bodies kept, so it reads its own parse
+    val scripted = graft.kernel.HtmlParser.parse(deep,
+      graft.kernel.ParseOptions(script = true))
+    assert(PageMeta.jsonLdOf(0L, scripted, sels).map(_._3) ==
+      Seq("{\"@type\":\"Thing\"}"))
     val sec = (System.nanoTime() - t0) / 1e9
     assert(sec < 20.0, s"deep extractors took $sec s — quadratic regression?")
   }
@@ -392,6 +456,21 @@ class PageMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nested = PageMeta.outlineOf(2L, graft.kernel.HtmlParser.parse(
       "<h1>A<div><h2>B</h2></div></h1>"))
     assert(nested == Seq((2L, 0, 1, "AB")))
+  }
+
+  test("outline: Spark path keeps document order and h1–h6 levels, emits a nested heading once") {
+    val rows = PageMeta.outline(pagesOfMany(Seq(
+      1L -> ("<body><h1>Top</h1><div><h3>Deep &amp; low</h3></div>" +
+        "<h2>Mid</h2><section><h5>five</h5></section><h6>six</h6></body>"),
+      2L -> "<p>no headings</p>",
+      3L -> "<h1>A<div><h2>B</h2></div></h1><h4>C</h4>")))
+      .collect().toSeq.map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("pos"),
+        r.getAs[Int]("level"), r.getAs[String]("heading")))
+    assert(rows == Seq(
+      (1L, 0, 1, "Top"), (1L, 1, 3, "Deep & low"), (1L, 2, 2, "Mid"),
+      (1L, 3, 5, "five"), (1L, 4, 6, "six"),
+      // the h2 nested inside the h1 is in the h1's text, not its own row
+      (3L, 0, 1, "AB"), (3L, 1, 4, "C")))
   }
 
   test("hostGraph: external edges and distinct destinations per source host") {

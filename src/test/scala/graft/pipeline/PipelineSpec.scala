@@ -252,10 +252,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("near-dup clustering: min-label components over candidate pairs") {
     import spark.implicits._
-    // components {1,2,3} (chain), {7,9}, singleton 5
+    // components {1,2,3} (chain), {7,9}, singleton 5; each candidate pair
+    // is a two-member bucket
     val ids = Seq(1L, 2L, 3L, 5L, 7L, 9L).toDF("doc_id")
     val pairs = Seq((2L, 3L), (1L, 2L), (7L, 9L)).toDF("id1", "id2")
-    val got = graft.ops.Dedup.clustersFromPairs(ids, pairs)
+    val key = struct(col("id1"), col("id2")).as("bucket_key")
+    val memberships = pairs.select(col("id1").as("doc_id"), key)
+      .union(pairs.select(col("id2").as("doc_id"), key))
+    val got = graft.ops.Dedup.clustersFromMemberships(ids, memberships)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 7L -> 7L, 9L -> 7L))
     // end-to-end: identical texts cluster together under the full pipeline
@@ -539,10 +543,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("clustering rejects duplicate doc_ids instead of corrupting components") {
     import spark.implicits._
     val dupIds = Seq(1L, 1L, 2L).toDF("doc_id")
-    val pairs = Seq((1L, 2L)).toDF("id1", "id2")
-    intercept[IllegalArgumentException] {
-      graft.ops.Dedup.clustersFromPairs(dupIds, pairs)
-    }
     intercept[IllegalArgumentException] {
       graft.ops.Dedup.clustersFromMemberships(dupIds,
         Seq((1L, "b")).toDF("doc_id", "bucket_key"))
