@@ -1,13 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Whole-suite physical-plan audit AND regression gate: flags
   * cartesian/nested-loop joins, counts exchanges + non-codegen UDF operators
   * per query, and FAILS (nonzero exit) when any query's final plan exceeds
   * the exchange budget or plans a non-whitelisted nested-loop join — so
   * lineage growth (the round-2 q38 defect: 4,088 Exchange nodes from an
-  * uncheckpointed iterative loop) can never silently return. Run after any
-  * query change:
+  * uncheckpointed iterative loop) can never silently return. A query whose
+  * DataFrame cannot be built gets an ERROR line, the sweep goes on, and the
+  * exit is still nonzero, naming it. Run after any query change:
   *   sbt -batch "runMain graft.PlanSweep [sfDir]"
   *
   * Known, deliberate exception: q17_embed_topk is the EXACT brute-force ANN
@@ -36,23 +38,35 @@ object PlanSweep {
     spark.sparkContext.setLogLevel("ERROR")
     val bad = Seq("CartesianProduct", "BroadcastNestedLoop")
     var violations = 0
+    val unbuilt = Seq.newBuilder[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-      val hits = bad.filter(plan.contains)
-        .filterNot(_ => BnljWhitelist.contains(name))
-      val exchanges = "Exchange".r.findAllIn(plan).length
-      val udfs = "BatchEvalPython|ScalaUDF".r.findAllIn(plan).length
-      val overBudget = exchanges > ExchangeBudget
-      if (hits.nonEmpty || overBudget) violations += 1
-      println(s"$name: exchanges=$exchanges udf=$udfs" +
-        (if (overBudget) s"  !!! OVER BUDGET ($ExchangeBudget)" else "") +
-        (if (hits.nonEmpty) s"  !!! ${hits.mkString(",")}" else ""))
+      val built =
+        try Some(fn(spark, sfDir).queryExecution.executedPlan.toString)
+        catch {
+          case NonFatal(e) =>
+            unbuilt += name
+            println(s"$name: ERROR cannot build plan: ${e.toString.linesIterator.next()}")
+            None
+        }
+      built.foreach { plan =>
+        val hits = bad.filter(plan.contains)
+          .filterNot(_ => BnljWhitelist.contains(name))
+        val exchanges = "Exchange".r.findAllIn(plan).length
+        val udfs = "BatchEvalPython|ScalaUDF".r.findAllIn(plan).length
+        val overBudget = exchanges > ExchangeBudget
+        if (hits.nonEmpty || overBudget) violations += 1
+        println(s"$name: exchanges=$exchanges udf=$udfs" +
+          (if (overBudget) s"  !!! OVER BUDGET ($ExchangeBudget)" else "") +
+          (if (hits.nonEmpty) s"  !!! ${hits.mkString(",")}" else ""))
+      }
     }
     spark.stop()
-    if (violations > 0) {
+    val failed = unbuilt.result()
+    if (failed.nonEmpty)
+      System.err.println(s"[plansweep] FAIL: no plan for ${failed.mkString(", ")}")
+    if (violations > 0)
       System.err.println(s"[plansweep] FAIL: $violations quer${if (violations == 1) "y" else "ies"} violated the plan budget")
-      sys.exit(1)
-    }
+    if (failed.nonEmpty || violations > 0) sys.exit(1)
     println("[plansweep] PASS: all plans within budget")
   }
 }

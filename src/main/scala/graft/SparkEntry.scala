@@ -68,13 +68,9 @@ object SparkEntry {
       // doc_id rides through ParsedDoc — scan → mapPartitions → project,
       // no join-back against the source table
       ExtractJob.run(pagesDf(s, dir)).toDF().select("doc_id", "text_out")),
-    "q02_parse_valid" -> ((s, dir) => {
-      val parsed = ExtractJob.run(pagesDf(s, dir)).toDF()
-      parsed.groupBy("lang").agg(
-        count(lit(1)).as("docs"),
-        sum(when(col("parse_ok"), 1L).otherwise(0L)).as("parse_ok_docs"),
-        sum("n_links").as("links"))
-    }),
+    "q02_parse_valid" -> ((s, dir) =>
+      ExtractJob.metrics(ExtractJob.run(pagesDf(s, dir)))
+        .select("lang", "docs", "parse_ok_docs", "links")),
     "q03_css_count" -> ((s, dir) => {
       // native Catalyst expression — the selector count stays inside
       // whole-stage codegen (no ScalaUDF island); UDF form remains as
@@ -887,12 +883,12 @@ object SparkEntry {
 
     "q71_time_travel" -> ((s, dir) => {
       // Iceberg-style snapshot TIME TRAVEL through the driver gate: commit
-      // four buckets of the corpus in sequence (each commit appends a
+      // the corpus's doc_id % 4 buckets in sequence (each commit appends a
       // snapshot recording the full committed set), then read the table AS
       // OF snapshot 3 — exactly buckets 0..2's rows exist in that state,
       // and the oracle predicts the row set from doc_id arithmetic. Reading
       // an old state scans ONLY that state's buckets (no full-scan+filter).
-      // EAGER SIDE EFFECT: the four bucket commits (full corpus writes +
+      // EAGER SIDE EFFECT: the bucket commits (full corpus writes +
       // read-backs) run at DataFrame-CONSTRUCTION time, not execution time
       // — the cost of this query is commit I/O by design. The temp table
       // is deleted on JVM exit so repeated harness/bench invocations do
@@ -901,22 +897,21 @@ object SparkEntry {
       val tbl = tempDirCleanedOnExit("graft_q71")
       val d = docs(s, dir)
         .withColumn(TableIO.BucketCol, pmod(col("doc_id"), lit(4)))
-      // ONE partitioned write lays out all four bucket directories in a
-      // single corpus pass (the former per-bucket writeBucket loop scanned
-      // the source four times and re-read each bucket for its row count —
-      // 8 jobs → 2); repartition on the bucket key first so each bucket
-      // commits as one well-sized file instead of one per scan task
-      // (guide §6 output sizing). The manifest/snapshot protocol is
-      // unchanged: data is fully written BEFORE the first commit, and the
-      // four manifests+snapshots still append in bucket order, so the
-      // snapshot log records the same incremental committed sets.
+      // ONE partitioned write lays out every bucket directory in a single
+      // corpus pass; repartition on the bucket key first so each bucket
+      // commits as one well-sized file instead of one per scan task. Data
+      // is fully written BEFORE the first commit, and the manifests +
+      // snapshots append in bucket order, so the snapshot log records the
+      // incremental committed sets. Only buckets present in the read-back
+      // counts commit: partitionBy creates no directory for an empty
+      // bucket, and a snapshot naming one could not be read back.
       d.repartition(col(TableIO.BucketCol))
         .write.partitionBy(TableIO.BucketCol).mode("overwrite").parquet(tbl)
       val rows = s.read.parquet(tbl)
         .groupBy(TableIO.BucketCol).count().collect()
-        .map(r => (r.getAs[Number](0).longValue, r.getLong(1))).toMap
-      (0L to 3L).foreach { b =>
-        TableIO.commitManifest(tbl, b, rows.getOrElse(b, 0L))
+        .map(r => (r.getAs[Number](0).longValue, r.getLong(1)))
+      rows.sortBy(_._1).foreach { case (b, n) =>
+        TableIO.commitManifest(tbl, b, n)
         TableIO.appendSnapshot(tbl, b)
       }
       TableIO.readSnapshot(s, tbl, snapshotId = 3L)
@@ -1409,7 +1404,7 @@ object SparkEntry {
       val qname = "q92_sessions_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val stream = graft.streaming.ExtractStream.hostSessions(
-        graft.streaming.ExtractStream.run(input.toDF()), gapMs = 600000L)
+        graft.pipeline.ExtractJob.run(input.toDF()), gapMs = 600000L)
         .toDF()
         .writeStream.format("memory").queryName(qname)
         .outputMode("append").start()

@@ -8,9 +8,10 @@ import graft.kernel._
   *
   * These are deliberately Scala UDFs wrapping the kernel: HTML parsing is a
   * black-box per-row computation (no Catalyst expression could fold it), so
-  * the UDF boundary costs only the row codec, not lost optimization. Scalar
-  * string ops that CAN stay inside codegen (entity decode) also exist as a
-  * native Catalyst expression — see graft.functions.HtmlUnescape.
+  * the UDF boundary costs only the row codec, not lost optimization. Entity
+  * decode is a scalar string op that CAN stay inside codegen, so it exists
+  * only as the native Catalyst expression `html_unescape_native`
+  * (graft.functions.HtmlUnescape, registered by GraftExtensions).
   *
   * Selectors are compiled once per executor (cache keyed by selector string)
   * — the analog of the reference compiling a Matcher once per query
@@ -82,10 +83,6 @@ object HtmlFunctions extends Serializable {
     }
   }
 
-  val htmlUnescapeUdf = udf { (s: String) =>
-    if (s == null) null else Entities.decode(s)
-  }
-
   /** Boilerplate-stripped main-content extraction (kernel heuristics —
     * graft.kernel.Boilerplate): one parse per row, returns
     * struct(main_text, n_stripped).
@@ -102,7 +99,6 @@ object HtmlFunctions extends Serializable {
     spark.udf.register("css_count", cssCount)
     spark.udf.register("css_first_text", cssFirstText)
     spark.udf.register("css_first_attr", cssFirstAttr)
-    spark.udf.register("html_unescape", htmlUnescapeUdf)
     spark.udf.register("main_content", mainContent)
   }
 }

@@ -287,9 +287,6 @@ object Dedup {
     docs.select(col("doc_id"), sim(col("text")).as("simhash"))
   }
 
-  /** Hamming distance between simhashes — the near-dup predicate. */
-  val hamming = udf { (a: Long, b: Long) => java.lang.Long.bitCount(a ^ b) }
-
   /** SimHash near-dup pairs at hamming distance <= maxHamming, found by
     * PIGEONHOLE-EXACT chunk banding: split each 64-bit simhash into
     * `maxHamming + 1` equal-ish chunks — any pair differing in at most

@@ -38,7 +38,6 @@ object Similarity {
   }
 
   val cosineUdf = udf { (a: Seq[Float], b: Seq[Float]) => cosineF(a, b) }
-  private def cosUdf = cosineUdf
 
   /** Pure-Column cosine via `zip_with` + `aggregate` — stays inside
     * whole-stage codegen, no UDF serialization boundary. Accumulates in
@@ -69,7 +68,7 @@ object Similarity {
     val scored = base.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosUdf(col("q_embedding"), col("embedding")), 4).as("c"))
+        round(cosineUdf(col("q_embedding"), col("embedding")), 4).as("c"))
     val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -166,25 +165,12 @@ object Similarity {
     *     construction — this is the IVF coarse quantizer, not a data scan;
     *     even 10^6 centroids × 1 KB vectors is one ~1 GB broadcast)
     *   - assignment: map-only UDF over the broadcast array — no join, no
-    *     shuffle. DEFAULT (flat) scans all k centroids per row, the right
-    *     cost up to k ≈ 10^4; `hierarchical = true` switches to the
-    *     TWO-LEVEL quantizer (level-1 reps of ~sqrt(k) groups scanned
-    *     first, then only the `probe1` nearest groups' members) — O(√k)
-    *     per row, the shape that holds at k ≈ 10^6 (~10^3 rep cosines +
-    *     probe1·10^3 member cosines instead of 10^6)
+    *     shuffle; each row scans all k centroids, the right cost up to
+    *     k ≈ 10^4
     *   - candidate gen: equi-join on the list id (shuffle-on-key), probing
     *     `nProbes`/`nCentroids` of the corpus — the 1/K read amplification
     *     win that makes IVF the on-disk ANN layout of choice
     *   - re-rank: exact cosine inside the probed lists only
-    *
-    * Two-level assignment is exact iff the true centroid's group is among
-    * the `probe1` probed groups AND no cross-group tie exists after
-    * 4-decimal rounding (flat breaks score ties toward the smallest cid;
-    * the two-level scan sees candidates in probed-group order, so an
-    * exact-tie across groups may break toward the group ranked first) —
-    * on clustered data with separated group reps both conditions hold and
-    * it EQUALS flat assignment, pinned by spec; the q43-gated default
-    * stays flat so the oracle's flat rebuild matches bit-for-bit.
     *
     * Ties everywhere break toward the smaller id after HALF_UP 4-decimal
     * rounding, mirrored by the oracle. Recall < 1 by construction (a true
@@ -196,8 +182,7 @@ object Similarity {
     * mirroring minhash/lsh hot-bucket hygiene; mirrored by the oracle.
     */
   def ivfTopK(emb: DataFrame, nQueries: Int, k: Int, nCentroids: Int = 16,
-      nProbes: Int = 4, maxList: Int = 100000,
-      hierarchical: Boolean = false, probe1: Int = 2): DataFrame = {
+      nProbes: Int = 4, maxList: Int = 100000): DataFrame = {
     val spark = emb.sparkSession
     val cents: Array[(Long, Array[Float])] = emb
       .filter(col("vec_id") < nCentroids)
@@ -208,26 +193,9 @@ object Similarity {
     require(cents.nonEmpty, "ivfTopK: empty centroid sample")
     val bc = spark.sparkContext.broadcast(cents)
 
-    // scored centroid CANDIDATES for one row: flat = every centroid (in
-    // cid order, O(k)); two-level = members of the `probe1` groups whose
-    // level-1 rep (first centroid of each ~sqrt(k)-sized group) scores
-    // highest — O(sqrt(k)) per row
-    def coarseCandidates(v: Seq[Float]): Array[(Double, Long)] = {
-      val cs = bc.value
-      if (!hierarchical || cs.length <= 4)
-        cs.map { case (cid, ce) => (round4(cosineF(v, ce)), cid) }
-      else {
-        val gSize = math.ceil(math.sqrt(cs.length.toDouble)).toInt
-        val groups = cs.grouped(gSize).toArray
-        val probed = groups.zipWithIndex
-          .map { case (grp, gi) => (round4(cosineF(v, grp.head._2)), gi) }
-          .sortBy { case (c, gi) => (-c, gi) }
-          .take(probe1)
-          .map(_._2)
-        probed.flatMap(gi =>
-          groups(gi).map { case (cid, ce) => (round4(cosineF(v, ce)), cid) })
-      }
-    }
+    // every centroid scored for one row, in cid order
+    def coarseCandidates(v: Seq[Float]): Array[(Double, Long)] =
+      bc.value.map { case (cid, ce) => (round4(cosineF(v, ce)), cid) }
 
     val assignUdf = udf { (v: Seq[Float]) =>
       val scored = coarseCandidates(v)
@@ -262,7 +230,7 @@ object Similarity {
     val cand = lists.join(broadcast(q), "list")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosUdf(col("q_embedding"), col("embedding")), 4).as("c"))
+        round(cosineUdf(col("q_embedding"), col("embedding")), 4).as("c"))
     val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("neighbor_id"))
     cand.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

@@ -194,29 +194,17 @@ object TextAnalysis {
 
   /** Winnowing (Schleimer et al., SIGMOD'03): min hash per sliding window of
     * `guarantee` rolling hashes → compact, position-robust fingerprint set.
+    * Returns the distinct selected values in first-seen order.
     */
-  private[ops] def winnow(hashes: Array[Long], guarantee: Int): Array[Long] = {
-    if (hashes.isEmpty) return hashes
-    if (hashes.length <= guarantee) return Array(hashes.min)
-    val out = scala.collection.mutable.LinkedHashSet.empty[Long]
-    var i = 0
-    while (i + guarantee <= hashes.length) {
-      var m = hashes(i)
-      var j = i + 1
-      while (j < i + guarantee) { if (hashes(j) < m) m = hashes(j); j += 1 }
-      out += m
-      i += 1
-    }
-    out.toArray
-  }
+  private[ops] def winnow(hashes: Array[Long], guarantee: Int): Array[Long] =
+    winnowPositions(hashes, guarantee).map(_._2).distinct
 
-  /** Winnowing selection WITH positions: the same per-window leftmost-min
-    * choice as [[winnow]] (so the VALUE set is identical — the spread /
+  /** Winnowing selection with positions: the per-window leftmost minimum as
+    * (position, hash) pairs, so a span can be mapped back to its char range
+    * for REMOVAL. [[winnow]] is its value projection, so the spread /
     * shared-fingerprint determination stays consistent with
-    * [[fingerprints]]), but keeping (position, hash) pairs so a span can
-    * be mapped back to its char range for REMOVAL. A hash selected at two
-    * positions keeps both (a passage repeated inside one doc marks both
-    * copies).
+    * [[fingerprints]]. A hash selected at two positions keeps both (a
+    * passage repeated inside one doc marks both copies).
     */
   private[ops] def winnowPositions(hashes: Array[Long],
       guarantee: Int): Array[(Int, Long)] = {

@@ -67,6 +67,9 @@ object ExtractJob {
     * joins-by-id are free — re-joining the output against the source table
     * just to recover an id was the single avoidable shuffle in the flagship
     * query); inputs without the column get -1.
+    *
+    * The unsalted plan is map-only, so the same call extracts a streaming
+    * pages frame (`readStream`) into a streaming Dataset[ParsedDoc].
     */
   def run(pages: DataFrame, saltPartitions: Int = 0,
       stripBoilerplate: Boolean = false,

@@ -45,9 +45,6 @@ object TableIO {
         .toSet
   }
 
-  /** Write a bucket's data (no commit yet — the manifest is the commit
-    * point and must come LAST, after any lineage/metrics writes).
-    */
   /** Training-data export sink: gzipped JSONL (one JSON object per line —
     * the standard LLM-corpus interchange format), partitioned like the
     * parquet layout. Spark's native JSON writer keeps this a map-only
@@ -61,6 +58,10 @@ object TableIO {
       .json(path)
   }
 
+  /** Write a bucket's data (no commit yet — the manifest is the commit
+    * point and must come LAST, after any lineage/metrics writes). Overwrite
+    * mode replaces an uncommitted bucket's leftover files from a crashed run.
+    */
   def writeBucketData(df: DataFrame, table: String, bucket: Long): Unit =
     df.write.mode("overwrite").parquet(s"$table/$BucketCol=$bucket")
 
@@ -74,18 +75,6 @@ object TableIO {
     Files.move(tmp, fin,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Idempotent bucket write + commit. A re-run after a crash rewrites any
-    * uncommitted bucket (overwrite) and skips committed ones — no duplicate
-    * output. The manifest row count comes from one read of the written
-    * parquet (footer metadata), not a recompute of `df`.
-    */
-  def writeBucket(df: DataFrame, table: String, bucket: Long): Unit = {
-    writeBucketData(df, table, bucket)
-    val rows = df.sparkSession.read.parquet(s"$table/$BucketCol=$bucket").count()
-    commitManifest(table, bucket, rows)
-    appendSnapshot(table, bucket)
   }
 
   // ---- snapshot log (Iceberg-style time travel over the commit log) ----

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.pipeline.{ExtractJob, ParsedDoc}
+import graft.pipeline.ParsedDoc
 
 /** Running per-host crawl-session state (flatMapGroupsWithState). */
 final case class HostState(
@@ -28,15 +28,12 @@ final case class CandidatePair(id1: Long, id2: Long, band: Int, bucket: Long)
 
 /** Structured-Streaming form of the extraction pipeline: the reference has
   * no streaming (SURVEY.md §2.G documents batch-with-resume as the covering
-  * design), but the kernel composes directly with readStream sources — the
-  * same typed mapPartitions runs per micro-batch, plus watermarked windowed
-  * metrics for continuous crawl-ingest monitoring.
+  * design), but the kernel composes directly with readStream sources —
+  * `ExtractJob.run` on a streaming frame runs the same typed mapPartitions
+  * per micro-batch; this object adds watermarked windowed metrics and the
+  * stateful operators for continuous crawl-ingest monitoring.
   */
 object ExtractStream {
-
-  /** streaming pages(url, warc_ts, html, lang, …) → streaming ParsedDoc. */
-  def run(pages: DataFrame): Dataset[ParsedDoc] =
-    ExtractJob.run(pages) // map-only: identical plan shape works on streams
 
   /** Watermarked per-minute ingest metrics (docs, parse failures, bytes).
     * Late data beyond 10 minutes is dropped; state is bounded.

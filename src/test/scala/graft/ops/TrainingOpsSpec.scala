@@ -191,17 +191,6 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(2L).getAs[String]("clean_text").endsWith(u2.takeRight(40)))
   }
 
-  test("winnowPositions selects the same value set as winnow") {
-    val texts = Seq(
-      "the quick brown fox jumps over the lazy dog repeatedly and often",
-      "short", "", "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa")
-    texts.foreach { t =>
-      val hs = TextAnalysis.rollingHashes(t, 16)
-      val vals = TextAnalysis.winnowPositions(hs, 8).map(_._2).toSet
-      assert(vals == TextAnalysis.winnow(hs, 8).toSet, s"value-set drift on '$t'")
-    }
-  }
-
   test("bpeTrain: argmax order, deterministic tie-break, non-overlapping rewrite, early stop") {
     // vocab (minCount=1): 'abab' x4 dominates -> first merge (a,b) cnt 8
     // (two occurrences per word x4); second merge pairs the new 'ab'

@@ -57,79 +57,95 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plain == salted)
   }
 
+  // ---- the bucketed commit path (ExtractMain.runBuckets) over Synth pages ----
+
+  private lazy val synthPages = Synth.pages(spark, "/root/testdata/sf0.001")
+
+  private def bucketsOf(pages: DataFrame, buckets: Long*): DataFrame =
+    TableIO.withBucket(pages, 4)
+      .filter(col(TableIO.BucketCol).isin(buckets: _*)).drop(TableIO.BucketCol)
+
+  private def runBuckets(pages: DataFrame, table: String): Unit =
+    graft.ExtractMain.runBuckets(spark, pages, table, nBuckets = 4,
+      saltParts = 0, failAtBucket = -1)
+
+  private def urlsOf(df: DataFrame): Seq[String] =
+    df.select("url").collect().map(_.getString(0)).toSeq.sorted
+
   test("TableIO bucket commit + resume skips committed buckets") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl").toString
-    import spark.implicits._
-    val df = (0 until 20).map { i =>
-      (s"u$i", java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(i * 3600L)), i)
-    }.toDF("url", "warc_ts", "v")
-    val nBuckets = 4
-    val bucketed = TableIO.withBucket(df, nBuckets)
-    // commit buckets 0 and 1
-    Seq(0L, 1L).foreach { b =>
-      TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === b), dir, b)
-    }
+    // a partly committed table: an earlier run committed buckets 0 and 1
+    runBuckets(bucketsOf(synthPages, 0L, 1L), dir)
     assert(TableIO.committedBuckets(dir) == Set(0L, 1L))
-    val pending = TableIO.pendingOnly(df, dir, nBuckets)
-    val pendingBuckets = pending.select(TableIO.BucketCol).distinct()
-      .collect().map(_.getLong(0)).toSet
+    val pendingBuckets = TableIO.pendingOnly(synthPages, dir, 4)
+      .select(TableIO.BucketCol).distinct().collect().map(_.getLong(0)).toSet
     assert(pendingBuckets == Set(2L, 3L))
-    // idempotent re-commit: same rows, no duplicates
-    TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === 1L), dir, 1L)
-    val rows = spark.read.parquet(s"$dir/${TableIO.BucketCol}=1").count()
-    assert(rows == bucketed.filter(col(TableIO.BucketCol) === 1L).count())
+    // ... and crashed after writing bucket 2's data, before its commit; the
+    // leftover files hold the wrong rows (buckets 2 and 3)
+    TableIO.writeBucketData(
+      ExtractJob.run(bucketsOf(synthPages, 2L, 3L)).toDF(), dir, 2L)
+    runBuckets(synthPages, dir)
+    assert(TableIO.committedBuckets(dir) == Set(0L, 1L, 2L, 3L))
+    // committed buckets were not redone: one snapshot per commit, in order
+    assert(TableIO.snapshots(dir).map(_._2) ==
+      Seq(Set(0L), Set(0L, 1L), Set(0L, 1L, 2L), Set(0L, 1L, 2L, 3L)))
+    // the uncommitted bucket was overwritten: exactly its own rows remain
+    assert(urlsOf(spark.read.parquet(s"$dir/${TableIO.BucketCol}=2")) ==
+      urlsOf(bucketsOf(synthPages, 2L)))
+    // every page exactly once, no duplicate output
+    assert(urlsOf(spark.read.parquet(dir)) == urlsOf(synthPages))
   }
 
   test("snapshot log gives time-travel reads over the commit history") {
     val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
-    import spark.implicits._
-    val df = (0 until 20).map { i =>
-      (s"u$i", java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(i * 3600L)), i)
-    }.toDF("url", "warc_ts", "v")
-    val bucketed = TableIO.withBucket(df, 4)
-    Seq(0L, 1L, 2L).foreach { b =>
-      TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === b), dir, b)
-    }
+    runBuckets(synthPages, dir)
     val log = TableIO.snapshots(dir)
-    assert(log.map(_._1) == Seq(1L, 2L, 3L)) // one snapshot per commit
-    assert(log.last._2 == Set(0L, 1L, 2L)) // full committed set recorded
+    assert(log.map(_._1) == Seq(1L, 2L, 3L, 4L)) // one snapshot per commit
+    assert(log.last._2 == Set(0L, 1L, 2L, 3L)) // full committed set recorded
     // time travel: state as of snapshot 1 sees only bucket 0's rows
-    val asOf1 = TableIO.readSnapshot(spark, dir, 1L)
-    assert(asOf1.count() ==
-      bucketed.filter(col(TableIO.BucketCol) === 0L).count())
-    // latest sees all three buckets; pre-history is empty
-    assert(TableIO.readSnapshot(spark, dir).count() ==
-      bucketed.filter(col(TableIO.BucketCol) < 3L).count())
+    assert(urlsOf(TableIO.readSnapshot(spark, dir, 1L)) ==
+      urlsOf(bucketsOf(synthPages, 0L)))
+    assert(urlsOf(TableIO.readSnapshot(spark, dir, 3L)) ==
+      urlsOf(bucketsOf(synthPages, 0L, 1L, 2L)))
+    // latest sees every bucket; pre-history is empty
+    assert(urlsOf(TableIO.readSnapshot(spark, dir)) == urlsOf(synthPages))
     assert(TableIO.readSnapshot(spark, dir, 0L).isEmpty)
-    // a re-commit appends a NEW snapshot (Iceberg-style append-only log)
-    TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === 1L), dir, 1L)
-    assert(TableIO.snapshots(dir).map(_._1).last == 4L)
-    assert(TableIO.readSnapshot(spark, dir, 3L).count() == asOf1.count() +
-      bucketed.filter(col(TableIO.BucketCol).isin(1L, 2L)).count())
+    // a re-run over a fully committed table commits nothing
+    runBuckets(synthPages, dir)
+    assert(TableIO.snapshots(dir) == log)
   }
 
   test("reconcileSnapshots repairs the commit→snapshot crash window") {
     val dir = java.nio.file.Files.createTempDirectory("graft_reconcile").toString
-    import spark.implicits._
-    val df = (0 until 20).map { i =>
-      (s"u$i", java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(i * 3600L)), i)
-    }.toDF("url", "warc_ts", "v")
-    val bucketed = TableIO.withBucket(df, 4)
-    TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === 0L), dir, 0L)
+    runBuckets(bucketsOf(synthPages, 0L), dir)
     // crash window: bucket 1's data + manifest land but the process dies
     // before appendSnapshot — the latest snapshot under-reports the table
     TableIO.writeBucketData(
-      bucketed.filter(col(TableIO.BucketCol) === 1L), dir, 1L)
+      ExtractJob.run(bucketsOf(synthPages, 1L)).toDF(), dir, 1L)
     TableIO.commitManifest(dir, 1L, 5L)
     assert(TableIO.committedBuckets(dir) == Set(0L, 1L))
     assert(TableIO.snapshots(dir).last._2 == Set(0L))
-    // reconcile appends exactly one catch-up snapshot with the true set
-    assert(TableIO.reconcileSnapshots(dir).nonEmpty)
-    assert(TableIO.snapshots(dir).last._2 == Set(0L, 1L))
-    assert(TableIO.readSnapshot(spark, dir).count() ==
-      bucketed.filter(col(TableIO.BucketCol) < 2L).count())
+    // the next run appends exactly one catch-up snapshot with the true set
+    // before committing the rest
+    runBuckets(synthPages, dir)
+    assert(TableIO.snapshots(dir).map(_._2) ==
+      Seq(Set(0L), Set(0L, 1L), Set(0L, 1L, 2L), Set(0L, 1L, 2L, 3L)))
+    assert(urlsOf(TableIO.readSnapshot(spark, dir, 2L)) ==
+      urlsOf(bucketsOf(synthPages, 0L, 1L)))
     // no drift → no-op (idempotent on every job start)
     assert(TableIO.reconcileSnapshots(dir).isEmpty)
+  }
+
+  test("q71 commits only the buckets its documents fill") {
+    // no document has doc_id % 4 == 1, so bucket 1 has no directory; it
+    // must get no manifest or snapshot either, and snapshot 3 is {0, 2, 3}
+    val dir = java.nio.file.Files.createTempDirectory("graft_q71_gap").toString
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .filter(col("doc_id") % 4 =!= 1)
+    docs.write.parquet(s"$dir/documents.parquet")
+    val out = graft.SparkEntry.queries("q71_time_travel")(spark, dir)
+    assert(out.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==
+      docs.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
   }
 
   test("trainShards: deterministic, dense per-shard positions, decorrelated from doc order") {
@@ -235,6 +251,49 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val remaining = TableIO.resumeByUrl(pages, committed).select("url")
       .collect().map(_.getString(0)).toSet
     assert(remaining == Set("a", "c"))
+  }
+
+  // ---- plan shape of our own operators, on a small temp parquet ----
+
+  private lazy val pagesParquet: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan")
+      .resolve("pages").toString
+    synthPages.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def planOf(df: DataFrame) = df.queryExecution.executedPlan
+
+  private def exchangesIn(df: DataFrame): Int =
+    planHelper.collect(planOf(df)) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }.length
+
+  private object planHelper
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("plan: ExtractJob.run is map-only and scans only the columns it needs") {
+    val parsed = ExtractJob.run(pagesParquet).toDF()
+    assert(exchangesIn(parsed) == 0)
+    val scans = planHelper.collect(planOf(parsed)) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.requiredSchema.fieldNames.toSet
+    }
+    // the `text` hint column is never read
+    assert(scans == Seq(Set("doc_id", "url", "warc_ts", "html", "lang")))
+  }
+
+  test("plan: saltPartitions > 0 adds exactly one Exchange") {
+    assert(exchangesIn(ExtractJob.run(pagesParquet, saltPartitions = 8).toDF()) == 1)
+  }
+
+  test("plan: resumeByUrl with a small committed side is a broadcast left-anti join") {
+    val committed = pagesParquet.filter(col("doc_id") % 10 < 3)
+    val joins = planHelper.collect(planOf(TableIO.resumeByUrl(pagesParquet, committed))) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+        (j.getClass.getSimpleName, j.joinType)
+    }
+    assert(joins == Seq(("BroadcastHashJoinExec", org.apache.spark.sql.catalyst.plans.LeftAnti)))
   }
 
   test("minhash LSH finds near-duplicates, not unrelated docs") {
@@ -743,32 +802,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = exact.intersect(ivf).size.toDouble / exact.size
     assert(recall >= 0.5, f"IVF recall $recall%.2f below floor vs exact top-k")
-  }
-
-  test("ivfTopK two-level coarse quantizer equals flat on clustered data") {
-    import spark.implicits._
-    // 16 centroids = 4 coarse directions x 4 fine offsets: group reps
-    // (centroids 0,4,8,12) each carry a DISTINCT coarse direction, so the
-    // level-1 rep scan always probes the true centroid's group and the
-    // two-level O(sqrt(k)) assignment reproduces the flat O(k) scan
-    val dims = 8
-    def centroid(i: Int): Seq[Float] = {
-      val v = Array.fill(dims)(0f)
-      v(i / 4) = 1f
-      v(4 + i % 4) = 0.3f
-      v.toSeq
-    }
-    val rows = (0 until 16).map(i => (i.toLong, centroid(i))) ++
-      (16 until 96).map { j =>
-        val c = centroid(j % 16).toArray
-        c(4 + j % 4) = c(4 + j % 4) + 0.02f * ((j / 16) % 3 - 1)
-        (j.toLong, c.toSeq)
-      }
-    val emb = rows.toDF("vec_id", "embedding")
-    def run(h: Boolean) = graft.ops.Similarity.ivfTopK(emb, nQueries = 8,
-      k = 3, nCentroids = 16, nProbes = 4, hierarchical = h)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
-    assert(run(h = false) == run(h = true))
   }
 
   test("ivfTopK probes fraction of lists: candidate set smaller than corpus") {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.pipeline.Page
+import graft.pipeline.{ExtractJob, Page}
 
 /** Structured-Streaming form of the pipeline: same kernel per micro-batch,
   * watermarked windowed metrics.
@@ -33,7 +33,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Page]
-    val q = ExtractStream.run(input.toDF())
+    val q = ExtractJob.run(input.toDF())
       .writeStream.format("memory").queryName("parsed_stream")
       .outputMode("append").start()
     try {
@@ -77,13 +77,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val html = "<nav><a href=\"/\">Home</a></nav><div class=\"c\"><p>kept body</p></div>" +
       "<footer>chrome</footer>"
     val batch = Seq(page("u1", 0, html)).toDF()
-    val parsed = graft.pipeline.ExtractJob.run(batch, stripBoilerplate = true).collect()
+    val parsed = ExtractJob.run(batch, stripBoilerplate = true).collect()
     assert(parsed.head.text_out == "kept body")
     // stats describe the emitted tree: nav/a/footer gone
     assert(parsed.head.n_links == 0)
     // same option through the streaming entry (identical map-only plan)
     val input = MemoryStream[Page]
-    val q = graft.pipeline.ExtractJob.run(input.toDF(), stripBoilerplate = true)
+    val q = ExtractJob.run(input.toDF(), stripBoilerplate = true)
       .writeStream.format("memory").queryName("strip_stream")
       .outputMode("append").start()
     try {
@@ -99,7 +99,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val input = MemoryStream[Page]
     val sessions = ExtractStream.hostSessions(
-      ExtractStream.run(input.toDF()), gapMs = 120000L) // 2-minute gap
+      ExtractJob.run(input.toDF()), gapMs = 120000L) // 2-minute gap
     val q = sessions.writeStream.format("memory").queryName("sessions_stream")
       .outputMode("append").start()
     try {
@@ -136,7 +136,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // streaming pass: flush all sessions with a far-future watermark event
     val input = MemoryStream[Page]
     val q = ExtractStream.hostSessions(
-      ExtractStream.run(input.toDF()), gapMs = 120000L)
+      ExtractJob.run(input.toDF()), gapMs = 120000L)
       .writeStream.format("memory").queryName("twin_stream")
       .outputMode("append").start()
     val streamed =
@@ -153,7 +153,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // batch pass over the same corpus (flush page excluded — the stream
     // only used it to advance the watermark)
     val batch = ExtractStream.hostSessionsBatch(
-      graft.pipeline.ExtractJob.run(corpus.toDF()).toDF(), gapSec = 120L)
+      ExtractJob.run(corpus.toDF()).toDF(), gapSec = 120L)
       .select("host", "docs", "errors", "bytes")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -166,7 +166,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Page]
-    val metrics = ExtractStream.windowedMetrics(ExtractStream.run(input.toDF()))
+    val metrics = ExtractStream.windowedMetrics(ExtractJob.run(input.toDF()))
     val q = metrics.writeStream.format("memory").queryName("metrics_stream")
       .outputMode("append").start()
     try {
